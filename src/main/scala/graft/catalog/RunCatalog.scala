@@ -6,20 +6,28 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.core.JsonGenerator
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.model.{LogEntry, PipelineRun, StepRun}
+import graft.util.{Fs, Json}
 
 /** Run-control catalog (SURVEY.md §1.1 control tables, §2.2 K3/K4,
   * §2.8 query surface).
   *
   * Driver-side metadata store: runs/steps/logs as NDJSON append logs
-  * under a work dir. Writes are plain driver-side file appends
-  * (microseconds — the reference's DB-write equivalent; a Spark write
-  * job per status transition cost seconds of fixed overhead per run);
-  * only the *queries* over the stores are Spark plans, so the same API
-  * works when the catalog grows to millions of runs.
+  * under a work dir, rolled into parquet segments every
+  * `compactThreshold` appends. Writes are plain driver-side file
+  * appends (microseconds — the reference's DB-write equivalent; a Spark
+  * write job per status transition cost seconds of fixed overhead per
+  * run). Reads are driver-side too: a [[CatalogIndex]] parses each new
+  * store file once and answers the API's polls from memory, so a
+  * monitoring page refresh starts no Spark job and takes no cores from
+  * the runs it watches. Its memory grows with the number of catalog
+  * rows: about 34 MB of heap for 10k runs of four steps and eight log
+  * lines each. The DataFrame methods are built from the same resolved
+  * rows, as local relations.
   *
   * RunNumber is a driver-side synchronized counter persisted to a file
   * (§2.6 A2 — the reference's `MAX+1` SQL pattern is racy; a real
@@ -29,7 +37,7 @@ class RunCatalog(private[graft] val spark: SparkSession, val dir: String,
                  clock: () => Long = () => System.currentTimeMillis(),
                  compactThreshold: Int = 1000,
                  tombstoneAgeFloorMs: Long = 0L) {
-  import spark.implicits._
+  import RunCatalog._
 
   private val runsDir  = s"$dir/pipeline_runs"
   private val stepsDir = s"$dir/step_runs"
@@ -38,14 +46,7 @@ class RunCatalog(private[graft] val spark: SparkSession, val dir: String,
 
   Seq(runsDir, stepsDir, logsDir).foreach(d => Files.createDirectories(Paths.get(d)))
 
-  private val runsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "run_id STRING, run_number BIGINT, pipeline_name STRING, status STRING, " +
-      "started_at TIMESTAMP, finished_at TIMESTAMP")
-  private val stepsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "run_id STRING, step_number INT, step_name STRING, status STRING, " +
-      "rows_affected BIGINT, error_message STRING, started_at TIMESTAMP, finished_at TIMESTAMP")
-  private val logsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "run_id STRING, log_at TIMESTAMP, level STRING, step_number INT, message STRING, details STRING")
+  private val index = new CatalogIndex(spark, runsDir, stepsDir, logsDir)
 
   val stepNames: Seq[String] = Seq("Data Pull", "Extract", "Transform", "Migrate")
 
@@ -58,32 +59,17 @@ class RunCatalog(private[graft] val spark: SparkSession, val dir: String,
   }
 
   // one writer at a time per catalog (the runner's logger vs the
-  // progress flusher, §2.10 C3); appends are atomic whole-file creates
+  // progress flusher, §2.10 C3); appends are whole-file creates
   private val writeLock = new Object
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  private def jts(t: Timestamp): String =
-    jstr(java.time.format.DateTimeFormatter.ISO_INSTANT.format(t.toInstant))
 
   // appends since construction, per store dir — drives auto-compaction
   private val appendCounts = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
 
-  private def jsonLines(rows: Seq[Map[String, Option[String]]], dirPath: String): Unit = {
+  private def jsonLines(rows: Seq[JsonGenerator => Unit], dirPath: String): Unit = {
     writeLock.synchronized {
-      val body = rows.map(_.collect { case (k, Some(v)) => s"${jstr(k)}:$v" }
-        .mkString("{", ",", "}")).mkString("", "\n", "\n")
       Files.writeString(
         Paths.get(dirPath, s"append-${System.nanoTime}-${UUID.randomUUID().toString.take(8)}.json"),
-        body, java.nio.file.StandardOpenOption.CREATE_NEW)
+        rows.map(Json.render).mkString("", "\n", "\n"), java.nio.file.StandardOpenOption.CREATE_NEW)
     }
     // K3 at scale: one tiny file per status transition means a
     // million-run catalog lists a million files on every API read —
@@ -91,61 +77,28 @@ class RunCatalog(private[graft] val spark: SparkSession, val dir: String,
     val n = appendCounts.computeIfAbsent(dirPath, _ => new java.util.concurrent.atomic.AtomicInteger())
     if (n.incrementAndGet() >= compactThreshold) {
       n.set(0)
-      compactStore(dirPath, schemaFor(dirPath))
+      compactStore(dirPath)
     }
-  }
-
-  private def schemaFor(path: String): org.apache.spark.sql.types.StructType =
-    if (path == runsDir) runsSchema else if (path == stepsDir) stepsSchema else logsSchema
-
-  /** Paths rolled into a segment by a past compaction — still on disk
-    * (so concurrent reads planned against them stay valid) but excluded
-    * from new listings (so they don't duplicate the segment's rows).
-    */
-  private def tombstoned(path: String): Set[String] = {
-    val fs = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty[java.io.File])
-    fs.filter(f => f.isFile && f.getName.startsWith("_tombstones-"))
-      .flatMap(f => scala.util.Try(Files.readAllLines(f.toPath)).toOption
-        .map(_.asScala.toSeq).getOrElse(Seq.empty))
-      .filter(_.nonEmpty).toSet
-  }
-
-  private def listStore(path: String): (Seq[String], Seq[String]) = {
-    val dead = tombstoned(path)
-    val fs = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty[java.io.File])
-    (fs.filter(f => f.isFile && f.getName.endsWith(".json") && !dead(f.getPath)).map(_.getPath).toSeq,
-      fs.filter(f => f.isDirectory && f.getName.startsWith("segment-") && !dead(f.getPath)).map(_.getPath).toSeq)
-  }
-
-  /** Append log + compacted segments, unioned. */
-  private def readStore(path: String, schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val (json, segs) = listStore(path)
-    val parts = Seq(
-      if (json.nonEmpty) Some(spark.read.schema(schema)
-        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSS]XXX")
-        .json(json: _*)) else None,
-      if (segs.nonEmpty) Some(spark.read.schema(schema).parquet(segs: _*)) else None).flatten
-    parts.reduceOption(_ unionByName _).getOrElse(
-      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
   }
 
   /** Roll every NDJSON append (and any previous segment) into one new
     * parquet segment. Runs inline under the write lock (an occasional
     * sub-second pause, amortized over `compactThreshold` microsecond
-    * appends).
+    * appends). The segment is written from the index's rows in store
+    * order, so nothing is parsed twice.
     *
     * Deletion is DEFERRED one compaction generation: rolled files are
     * tombstoned (excluded from new listings) but left on disk, and only
     * files tombstoned by a *previous* compaction are physically
-    * deleted. A reader whose plan listed files just before this
-    * compaction therefore keeps a consistent, fully-readable snapshot
-    * for a whole further cycle (~`compactThreshold` appends) — no
-    * FileNotFoundException mid-query, no transient duplicate rows.
+    * deleted. A reader in another process that listed files just before
+    * this compaction therefore keeps a consistent, fully-readable
+    * snapshot for a whole further cycle (~`compactThreshold` appends) —
+    * no FileNotFoundException mid-query, no transient duplicate rows.
     * Crash-safe ordering: the segment is fully written before the
     * tombstone; a crash in between leaves duplicate rows, which the
     * read-side latest-per-key resolution collapses for runs/steps.
     */
-  private def compactStore(path: String, schema: org.apache.spark.sql.types.StructType): Unit =
+  private def compactStore(path: String): Unit =
     writeLock.synchronized {
       // reap the previous generation first: anything already tombstoned
       // was excluded from every listing since that tombstone published,
@@ -164,33 +117,32 @@ class RunCatalog(private[graft] val spark: SparkSession, val dir: String,
             clock() - tombstonePublishedMs(f) >= tombstoneAgeFloorMs))
         .foreach { tf =>
           scala.util.Try(Files.readAllLines(tf.toPath)).toOption.map(_.asScala).getOrElse(Seq.empty)
-            .filter(_.nonEmpty).foreach { p =>
-              val pp = Paths.get(p)
-              if (Files.isDirectory(pp)) {
-                val walk = Files.walk(pp)
-                try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                  .iterator().forEachRemaining(q => Files.deleteIfExists(q))
-                finally walk.close()
-              } else Files.deleteIfExists(pp)
-            }
+            .filter(_.nonEmpty).foreach(p => Fs.deleteRecursively(Paths.get(p)))
           Files.deleteIfExists(tf.toPath)
         }
-      val (json, oldSegs) = listStore(path)
-      if (json.isEmpty) return
-      val df = readStore(path, schema)
-      val seg = Paths.get(path, s"segment-${System.nanoTime}")
-      df.coalesce(1).write.mode("overwrite").parquet(seg.toString)
-      // tombstone what this compaction rolled (atomic publish via move).
-      // The publish time is stamped from the catalog clock() into the
-      // name (`_tombstones-<clockMs>-<nano>`): the age floor must compare
-      // clock() against clock(), not against fs mtime — with an injected
-      // non-realtime clock the mtime comparison would retain files
-      // forever or reap them immediately.
-      val tmp = Files.createTempFile(Paths.get(path), "_tomb-tmp", "")
-      Files.writeString(tmp, (json ++ oldSegs).mkString("\n"))
-      Files.move(tmp, Paths.get(path, s"_tombstones-${clock()}-${System.nanoTime}"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      if (path == runsDir) roll(index.runStore, runRow)
+      else if (path == stepsDir) roll(index.stepStore, stepRow)
+      else roll(index.logStore, logRow)
     }
+
+  private def roll[A](store: index.Store[A], toRow: A => Row): Unit = {
+    val (rolled, rows) = index.snapshot(store)
+    if (!rolled.exists(_.endsWith(".json"))) return
+    val seg = s"segment-${System.nanoTime}"
+    spark.createDataFrame(rows.map(toRow).asJava, store.schema)
+      .coalesce(1).write.mode("overwrite").parquet(Paths.get(store.dir, seg).toString)
+    // tombstone what this compaction rolled (atomic publish via move).
+    // The publish time is stamped from the catalog clock() into the
+    // name (`_tombstones-<clockMs>-<nano>`): the age floor must compare
+    // clock() against clock(), not against fs mtime — with an injected
+    // non-realtime clock the mtime comparison would retain files
+    // forever or reap them immediately.
+    val tmp = Files.createTempFile(Paths.get(store.dir), "_tomb-tmp", "")
+    Files.writeString(tmp, rolled.map(n => Paths.get(store.dir, n).toString).mkString("\n"))
+    Files.move(tmp, Paths.get(store.dir, s"_tombstones-${clock()}-${System.nanoTime}"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    index.adopt(store, seg, rows)
+  }
 
   /** Publish time of a tombstone file in the catalog clock()'s frame:
     * the first stamp of `_tombstones-<clockMs>-<nano>`; legacy
@@ -205,26 +157,7 @@ class RunCatalog(private[graft] val spark: SparkSession, val dir: String,
   /** Force a compaction pass over all three stores (maintenance hook;
     * normally triggered automatically every `compactThreshold` appends).
     */
-  def compact(): Unit =
-    Seq(runsDir -> runsSchema, stepsDir -> stepsSchema, logsDir -> logsSchema)
-      .foreach { case (d, s) => compactStore(d, s) }
-
-  private def runRow(r: PipelineRun): Map[String, Option[String]] = Map(
-    "run_id" -> Some(jstr(r.run_id)), "run_number" -> Some(r.run_number.toString),
-    "pipeline_name" -> Some(jstr(r.pipeline_name)), "status" -> Some(jstr(r.status)),
-    "started_at" -> Some(jts(r.started_at)), "finished_at" -> r.finished_at.map(jts))
-
-  private def stepRow(r: StepRun): Map[String, Option[String]] = Map(
-    "run_id" -> Some(jstr(r.run_id)), "step_number" -> Some(r.step_number.toString),
-    "step_name" -> Some(jstr(r.step_name)), "status" -> Some(jstr(r.status)),
-    "rows_affected" -> Some(r.rows_affected.toString),
-    "error_message" -> r.error_message.map(jstr),
-    "started_at" -> r.started_at.map(jts), "finished_at" -> r.finished_at.map(jts))
-
-  private def logRow(r: LogEntry): Map[String, Option[String]] = Map(
-    "run_id" -> Some(jstr(r.run_id)), "log_at" -> Some(jts(r.log_at)),
-    "level" -> Some(jstr(r.level)), "step_number" -> Some(r.step_number.toString),
-    "message" -> Some(jstr(r.message)), "details" -> r.details.map(jstr))
+  def compact(): Unit = Seq(runsDir, stepsDir, logsDir).foreach(compactStore)
 
   /** Create run header (Running) + one Pending step row per step
     * (reference `orchestrator/index.js:32-51`).
@@ -241,9 +174,9 @@ class RunCatalog(private[graft] val spark: SparkSession, val dir: String,
   def startRunWithSteps(pipelineName: String, steps: Seq[String]): String = {
     require(steps.nonEmpty, "a run needs at least one step")
     val runId = UUID.randomUUID().toString
-    jsonLines(Seq(runRow(PipelineRun(runId, nextRunNumber(), pipelineName, "Running", now(), None))), runsDir)
+    jsonLines(Seq(writeRun(PipelineRun(runId, nextRunNumber(), pipelineName, "Running", now(), None))), runsDir)
     jsonLines(steps.zipWithIndex.map { case (name, i) =>
-      stepRow(StepRun(runId, i + 1, name, "Pending", 0L, None, None, None))
+      writeStep(StepRun(runId, i + 1, name, "Pending", 0L, None, None, None))
     }, stepsDir)
     runId
   }
@@ -266,89 +199,66 @@ class RunCatalog(private[graft] val spark: SparkSession, val dir: String,
                       status: String, rowsAffected: Long = 0L,
                       error: Option[String] = None): Unit = {
     val ts = Some(now())
-    jsonLines(Seq(stepRow(StepRun(runId, stepNumber, stepName, status, rowsAffected,
+    jsonLines(Seq(writeStep(StepRun(runId, stepNumber, stepName, status, rowsAffected,
       error, if (status == "Running") ts else None,
       if (status == "Success" || status == "Failed" || status == "Cancelled") ts else None))), stepsDir)
   }
 
   def finishRun(runId: String, status: String): Unit =
-    jsonLines(Seq(runRow(PipelineRun(runId, -1L, "", status, now(), Some(now())))), runsDir)
+    jsonLines(Seq(writeRun(PipelineRun(runId, -1L, "", status, now(), Some(now())))), runsDir)
 
   def log(runId: String, level: String, stepNumber: Int, message: String,
           details: Option[String] = None): Unit =
-    jsonLines(Seq(logRow(LogEntry(runId, now(), level, stepNumber, message, details))), logsDir)
+    jsonLines(Seq(writeLog(LogEntry(runId, now(), level, stepNumber, message, details))), logsDir)
 
   // ---- query surface (§2.8) -------------------------------------------
-
-  /** Lifecycle rank — the append-log's latest state per key is the
-    * furthest-progressed status (Pending < Running < terminal).
-    */
-  private def statusRank = when(col("status") === "Pending", 0)
-    .when(col("status") === "Running", 1).otherwise(2)
-
-  private def latestPerKey(df: DataFrame, keys: Seq[String]): DataFrame = {
-    // statusRank first (lifecycle progress), then append time so two
-    // terminal appends for one key (e.g. Failed racing Cancelled)
-    // resolve deterministically; status as the final total-order key
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(statusRank.desc, col("finished_at").desc_nulls_last, col("status").desc)
-    df.withColumn("_rn", row_number().over(w)).filter($"_rn" === 1).drop("_rn")
-  }
-
-  def runs(): DataFrame = {
-    val raw = readStore(runsDir, runsSchema)
-    // resolve append-log: the run header carries run_number/name; the
-    // finish marker (run_number = -1) carries final status + finished_at
-    val headers = raw.filter($"run_number" > 0)
-      .select($"run_id", $"run_number", $"pipeline_name", $"started_at")
-      .dropDuplicates("run_id") // a crash between segment write and
-      // append deletion can leave the same header in both stores
-    val finals = latestPerKey(raw, Seq("run_id"))
-      .select($"run_id", $"status", $"finished_at")
-    headers.join(finals, Seq("run_id"), "left")
-  }
-
-  def steps(runId: String): DataFrame =
-    latestPerKey(readStore(stepsDir, stepsSchema).filter($"run_id" === runId),
-      Seq("run_id", "step_number"))
-      .orderBy($"step_number") // O3
+  //
+  // Every read resolves through the index. The row methods serve the
+  // API; the DataFrame methods wrap the same rows in local relations.
 
   /** GET /runs — conjunctive equality filters + top-100 newest (O1). */
-  def listRuns(pipelineName: Option[String] = None, status: Option[String] = None): DataFrame = {
-    var df = runs()
-    pipelineName.foreach(p => df = df.filter($"pipeline_name" === p))
-    status.foreach(st => df = df.filter($"status" === st))
-    df.orderBy($"started_at".desc).limit(100)
-  }
+  def runRows(pipelineName: Option[String] = None, status: Option[String] = None): Seq[PipelineRun] =
+    index.listRuns(pipelineName, status, 100)
+
+  /** GET /runs/{id} — one run by id, however old. */
+  def run(runId: String): Option[PipelineRun] = index.run(runId)
+
+  /** One run's resolved steps, by step number (O3). */
+  def stepRows(runId: String): Seq[StepRun] = index.steps(runId)
 
   /** GET /logs — filters + capped top-N newest (O2: default 500, max 2000). */
+  def logRows(runId: Option[String] = None, level: Option[String] = None,
+              limit: Int = 500): Seq[LogEntry] =
+    index.logs(runId, level, math.min(limit, 2000))
+
+  private def frame(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  def runs(): DataFrame = frame(index.listRuns(None, None, Int.MaxValue).map(runViewRow), runViewSchema)
+
+  def steps(runId: String): DataFrame = frame(stepRows(runId).map(stepRow), stepsSchema)
+
+  def listRuns(pipelineName: Option[String] = None, status: Option[String] = None): DataFrame =
+    frame(runRows(pipelineName, status).map(runViewRow), runViewSchema)
+
   def listLogs(runId: Option[String] = None, level: Option[String] = None,
-               limit: Int = 500): DataFrame = {
-    var df = readStore(logsDir, logsSchema)
-    runId.foreach(r => df = df.filter($"run_id" === r))
-    level.foreach(l => df = df.filter($"level" === l))
-    df.orderBy($"log_at".desc).limit(math.min(limit, 2000))
-  }
+               limit: Int = 500): DataFrame =
+    frame(logRows(runId, level, limit).map(logRow), logsSchema)
 
   /** Run detail = header ⊕ steps[] (J2 parent-child assembly). */
   def runDetail(runId: String): DataFrame =
-    runs().filter($"run_id" === runId)
-      .join(steps(runId).groupBy($"run_id")
-        .agg(collect_list(struct($"step_number", $"step_name", $"status", $"rows_affected"))
-          .as("steps")), Seq("run_id"), "left")
+    frame(run(runId).toSeq.map { r =>
+      val steps = stepRows(runId).map(s => Row(s.step_number, s.step_name, s.status, s.rows_affected))
+      Row.fromSeq(runViewRow(r).toSeq :+ (if (steps.isEmpty) null else steps))
+    }, runDetailSchema)
 
   /** A4 status rollup across steps + C5 timeout sweep predicate. */
-  def runStatusRollup(): DataFrame = {
-    val s = latestPerKey(readStore(stepsDir, stepsSchema), Seq("run_id", "step_number"))
-    s.groupBy($"run_id").agg(
-      min($"started_at").as("started"),
-      max($"finished_at").as("finished"),
-      when(array_contains(collect_set($"status"), "Failed"), "Failed")
-        .when(array_contains(collect_set($"status"), "Running"), "Running")
-        .when(array_contains(collect_set($"status"), "Pending"), "Pending")
-        .otherwise("Success").as("rollup_status"))
-  }
+  def runStatusRollup(): DataFrame =
+    frame(index.allSteps().map { case (id, ss) =>
+      val statuses = ss.map(_.status).toSet
+      Row(id, ss.flatMap(_.started_at).minOption.orNull, ss.flatMap(_.finished_at).maxOption.orNull,
+        Seq("Failed", "Running", "Pending").find(statuses).getOrElse("Success"))
+    }, rollupSchema)
 
   /** C5: mark runs Running for more than `hours` as timed out. Sweeps
     * the runs' non-terminal *steps* too — a driver that died mid-step
@@ -356,15 +266,98 @@ class RunCatalog(private[graft] val spark: SparkSession, val dir: String,
     */
   def sweepTimeouts(hours: Int = 6): Seq[String] = {
     val cutoff = new Timestamp(clock() - hours * 3600L * 1000L)
-    val stale = runs().filter($"status" === "Running" && $"started_at" < lit(cutoff))
-      .select($"run_id").as[String].collect().toSeq
+    val stale = index.listRuns(None, Some("Running"), Int.MaxValue)
+      .filter(r => r.started_at != null && r.started_at.before(cutoff)).map(_.run_id)
     stale.foreach { id =>
       finishRun(id, s"Failed-TimeOut-${hours}Hours")
-      steps(id).filter($"status".isin("Pending", "Running"))
-        .select($"step_number").as[Int].collect()
-        .foreach(n => updateStep(id, n, "Failed",
+      stepRows(id).filter(s => s.status == "Pending" || s.status == "Running")
+        .foreach(s => updateStep(id, s.step_number, "Failed",
           error = Some(s"Swept: run timed out after ${hours}h")))
     }
     stale
+  }
+}
+
+object RunCatalog {
+  val runsSchema: StructType = StructType.fromDDL(
+    "run_id STRING, run_number BIGINT, pipeline_name STRING, status STRING, " +
+      "started_at TIMESTAMP, finished_at TIMESTAMP")
+  val stepsSchema: StructType = StructType.fromDDL(
+    "run_id STRING, step_number INT, step_name STRING, status STRING, " +
+      "rows_affected BIGINT, error_message STRING, started_at TIMESTAMP, finished_at TIMESTAMP")
+  val logsSchema: StructType = StructType.fromDDL(
+    "run_id STRING, log_at TIMESTAMP, level STRING, step_number INT, message STRING, details STRING")
+
+  /** A resolved run: header fields, then the final status. */
+  val runViewSchema: StructType = StructType.fromDDL(
+    "run_id STRING, run_number BIGINT, pipeline_name STRING, started_at TIMESTAMP, " +
+      "status STRING, finished_at TIMESTAMP")
+  private val runDetailSchema: StructType = StructType.fromDDL(
+    "run_id STRING, run_number BIGINT, pipeline_name STRING, started_at TIMESTAMP, " +
+      "status STRING, finished_at TIMESTAMP, " +
+      "steps ARRAY<STRUCT<step_number: INT, step_name: STRING, status: STRING, rows_affected: BIGINT>>")
+  private val rollupSchema: StructType = StructType.fromDDL(
+    "run_id STRING, started TIMESTAMP, finished TIMESTAMP, rollup_status STRING")
+
+  // store rows <-> Spark rows (segments and local relations)
+
+  private[catalog] def runRow(r: PipelineRun): Row =
+    Row(r.run_id, r.run_number, r.pipeline_name, r.status, r.started_at, r.finished_at.orNull)
+  private def runViewRow(r: PipelineRun): Row =
+    Row(r.run_id, r.run_number, r.pipeline_name, r.started_at, r.status, r.finished_at.orNull)
+  private[catalog] def stepRow(r: StepRun): Row =
+    Row(r.run_id, r.step_number, r.step_name, r.status, r.rows_affected,
+      r.error_message.orNull, r.started_at.orNull, r.finished_at.orNull)
+  private[catalog] def logRow(r: LogEntry): Row =
+    Row(r.run_id, r.log_at, r.level, r.step_number, r.message, r.details.orNull)
+
+  private def long(r: Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
+  private def int(r: Row, i: Int): Int = if (r.isNullAt(i)) 0 else r.getInt(i)
+  private def ts(r: Row, i: Int): Option[Timestamp] = Option(r.getTimestamp(i))
+
+  private[catalog] def readRun(r: Row): PipelineRun = PipelineRun(r.getString(0), long(r, 1),
+    r.getString(2), r.getString(3), r.getTimestamp(4), ts(r, 5))
+  private[catalog] def readStep(r: Row): StepRun = StepRun(r.getString(0), int(r, 1), r.getString(2),
+    r.getString(3), long(r, 4), Option(r.getString(5)), ts(r, 6), ts(r, 7))
+  private[catalog] def readLog(r: Row): LogEntry = LogEntry(r.getString(0), r.getTimestamp(1),
+    r.getString(2), int(r, 3), r.getString(4), Option(r.getString(5)))
+
+  // store rows -> NDJSON appends (timestamps as ISO-8601 instants)
+
+  private def iso(t: Timestamp): String = java.time.format.DateTimeFormatter.ISO_INSTANT.format(t.toInstant)
+
+  private def writeRun(r: PipelineRun): JsonGenerator => Unit = g => {
+    g.writeStartObject()
+    g.writeStringField("run_id", r.run_id)
+    g.writeNumberField("run_number", r.run_number)
+    g.writeStringField("pipeline_name", r.pipeline_name)
+    g.writeStringField("status", r.status)
+    g.writeStringField("started_at", iso(r.started_at))
+    r.finished_at.foreach(t => g.writeStringField("finished_at", iso(t)))
+    g.writeEndObject()
+  }
+
+  private def writeStep(r: StepRun): JsonGenerator => Unit = g => {
+    g.writeStartObject()
+    g.writeStringField("run_id", r.run_id)
+    g.writeNumberField("step_number", r.step_number)
+    g.writeStringField("step_name", r.step_name)
+    g.writeStringField("status", r.status)
+    g.writeNumberField("rows_affected", r.rows_affected)
+    r.error_message.foreach(g.writeStringField("error_message", _))
+    r.started_at.foreach(t => g.writeStringField("started_at", iso(t)))
+    r.finished_at.foreach(t => g.writeStringField("finished_at", iso(t)))
+    g.writeEndObject()
+  }
+
+  private def writeLog(r: LogEntry): JsonGenerator => Unit = g => {
+    g.writeStartObject()
+    g.writeStringField("run_id", r.run_id)
+    g.writeStringField("log_at", iso(r.log_at))
+    g.writeStringField("level", r.level)
+    g.writeNumberField("step_number", r.step_number)
+    g.writeStringField("message", r.message)
+    r.details.foreach(g.writeStringField("details", _))
+    g.writeEndObject()
   }
 }

@@ -3,14 +3,19 @@ package graft.http
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.sql.Timestamp
+import java.util.concurrent.{Executors, TimeUnit}
 
 import scala.concurrent.ExecutionContext
 
+import com.fasterxml.jackson.core.JsonGenerator
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.DataFrame
 
 import graft.catalog.RunCatalog
+import graft.model.{LogEntry, PipelineRun, StepRun}
 import graft.runner.PipelineRunner
+import graft.util.Json
 
 /** REST monitoring + trigger API (SURVEY.md §2.8 endpoints, §2.10
   * C2/C4/C5), on the JDK's built-in HttpServer — zero extra deps.
@@ -32,7 +37,11 @@ import graft.runner.PipelineRunner
   *   POST /admin/sweep-timeouts?hours=    mark stale Running runs failed
   *
   * The coordination channel is the catalog (exactly the reference's
-  * design: the API reads what the background run writes) — except
+  * design: the API reads what the background run writes). The run,
+  * step and log routes read its driver-side index, so a poll starts no
+  * Spark job; their bodies keep Spark's `toJSON` shape (plan column
+  * order, null fields omitted, timestamps as
+  * `yyyy-MM-dd'T'HH:mm:ss.SSSXXX` in the session time zone) — except
   * `/streams`, which reads the live `SparkSession.streams` registry:
   * the streaming twins (file-trigger, merge sink, dedup ingest) have
   * no catalog runs, so their observability comes straight from the
@@ -47,13 +56,75 @@ class ApiServer(catalog: RunCatalog, runner: PipelineRunner,
   private implicit val ec: ExecutionContext = ExecutionContext.global
   private val MaxUploadBytes = 10 * 1024 * 1024
 
+  // a response leaves as two writes (headers, then body); without
+  // TCP_NODELAY the body waits out the client's delayed ACK, ~40 ms on
+  // every keep-alive request after the first. Read once per JVM, when
+  // the first server is created; an explicit setting wins.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+  private val pool = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, s"graft-api-${server.getAddress.getPort}-${n.incrementAndGet()}"))
+  }
+  server.setExecutor(pool)
 
   def boundPort: Int = server.getAddress.getPort
 
   private def jsonRows(df: DataFrame): String =
     df.toJSON.collect().mkString("[", ",", "]")
+
+  // ---- catalog bodies ---------------------------------------------------
+
+  /** Spark's JSON timestamp text in the session's current time zone. */
+  private def timestamps(): Timestamp => String = {
+    val zone = org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+      catalog.spark.conf.get("spark.sql.session.timeZone"))
+    val f = java.time.format.DateTimeFormatter
+      .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX", java.util.Locale.US).withZone(zone)
+    t => f.format(t.toInstant)
+  }
+
+  private def field(g: JsonGenerator, k: String, v: String): Unit =
+    if (v != null) g.writeStringField(k, v)
+
+  private def array[A](g: JsonGenerator, rows: Seq[A])(write: A => Unit): Unit = {
+    g.writeStartArray(); rows.foreach(write); g.writeEndArray()
+  }
+
+  private def writeRuns(g: JsonGenerator, rows: Seq[PipelineRun], ts: Timestamp => String): Unit =
+    array(g, rows) { r =>
+      g.writeStartObject()
+      field(g, "run_id", r.run_id); g.writeNumberField("run_number", r.run_number)
+      field(g, "pipeline_name", r.pipeline_name); field(g, "started_at", Option(r.started_at).map(ts).orNull)
+      field(g, "status", r.status); field(g, "finished_at", r.finished_at.map(ts).orNull)
+      g.writeEndObject()
+    }
+
+  private def writeSteps(g: JsonGenerator, rows: Seq[StepRun], ts: Timestamp => String): Unit =
+    array(g, rows) { s =>
+      g.writeStartObject()
+      field(g, "run_id", s.run_id); g.writeNumberField("step_number", s.step_number)
+      field(g, "step_name", s.step_name); field(g, "status", s.status)
+      g.writeNumberField("rows_affected", s.rows_affected); field(g, "error_message", s.error_message.orNull)
+      field(g, "started_at", s.started_at.map(ts).orNull); field(g, "finished_at", s.finished_at.map(ts).orNull)
+      g.writeEndObject()
+    }
+
+  private def writeLogs(g: JsonGenerator, rows: Seq[LogEntry], ts: Timestamp => String): Unit =
+    array(g, rows) { l =>
+      g.writeStartObject()
+      field(g, "run_id", l.run_id); field(g, "log_at", Option(l.log_at).map(ts).orNull)
+      field(g, "level", l.level); g.writeNumberField("step_number", l.step_number)
+      field(g, "message", l.message); field(g, "details", l.details.orNull)
+      g.writeEndObject()
+    }
+
+  private def logsBody(runId: Option[String], level: Option[String], limit: Int): String = {
+    val ts = timestamps()
+    Json.render(writeLogs(_, catalog.logRows(runId, level, limit), ts))
+  }
 
   private def respond(x: HttpExchange, code: Int, body: String,
                       contentType: String = "application/json"): Unit = {
@@ -77,17 +148,25 @@ class ApiServer(catalog: RunCatalog, runner: PipelineRunner,
     val q = query(x)
     (method, path.stripSuffix("/").split("/").toList.drop(1)) match {
       case ("GET", List("runs")) =>
-        respond(x, 200, jsonRows(catalog.listRuns(q.get("pipelineName"), q.get("status"))))
+        val ts = timestamps()
+        respond(x, 200, Json.render(writeRuns(_, catalog.runRows(q.get("pipelineName"), q.get("status")), ts)))
       case ("GET", List("runs", id)) =>
-        val runs = jsonRows(
-          catalog.listRuns().filter(org.apache.spark.sql.functions.col("run_id") === id))
-        if (runs == "[]") respond(x, 404, """{"error":"not found"}""")
-        else respond(x, 200, s"""{"run":$runs,"steps":${jsonRows(catalog.steps(id))}}""")
+        catalog.run(id) match {
+          case None => respond(x, 404, """{"error":"not found"}""")
+          case Some(r) =>
+            val ts = timestamps()
+            respond(x, 200, Json.render { g =>
+              g.writeStartObject()
+              g.writeFieldName("run"); writeRuns(g, Seq(r), ts)
+              g.writeFieldName("steps"); writeSteps(g, catalog.stepRows(id), ts)
+              g.writeEndObject()
+            })
+        }
       case ("GET", List("runs", id, "logs")) =>
-        respond(x, 200, jsonRows(catalog.listLogs(runId = Some(id))))
+        respond(x, 200, logsBody(Some(id), None, 500))
       case ("GET", List("logs")) =>
-        respond(x, 200, jsonRows(catalog.listLogs(q.get("runId"), q.get("level"),
-          q.get("limit").map(_.toInt).getOrElse(500))))
+        respond(x, 200, logsBody(q.get("runId"), q.get("level"),
+          q.get("limit").map(_.toInt).getOrElse(500)))
       case ("POST", List("pipeline", "upload")) =>
         val rawBody = x.getRequestBody.readNBytes(MaxUploadBytes + 1)
         if (rawBody.length > MaxUploadBytes) respond(x, 413, """{"error":"upload too large"}""")
@@ -139,29 +218,18 @@ class ApiServer(catalog: RunCatalog, runner: PipelineRunner,
         // denominator for a progress bar (reference StepProgress
         // RowsProcessed/RowsTotal pair): the run's batch size, known
         // once Data Pull commits its count
-        val total = scala.util.Try {
-          import org.apache.spark.sql.functions.col
-          catalog.steps(id)
-            .filter(col("step_number") === 1 && col("status") === "Success")
-            .select(col("rows_affected")).collect()
-            .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(0L)
-        }.getOrElse(0L)
+        val total = catalog.stepRows(id)
+          .find(s => s.step_number == 1 && s.status == "Success").map(_.rows_affected).getOrElse(0L)
         respond(x, 200, s"""{"runId":"$id","recordsProcessed":$n,"rowsTotal":$total}""")
       // schedule CRUD (C6 — reference ApiServlet schedules endpoints)
       case ("GET", List("schedules")) =>
         // user-supplied fields (name, runAtTime, sourcePath arrive from
         // the create form) must be JSON-escaped: one quote in a name
         // would otherwise break the whole listing for every client
-        def js(v: String): String = "\"" + v.flatMap {
-          case '"' => "\\\""
-          case '\\' => "\\\\"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
         val rows = schedules.map(_.list()).getOrElse(Seq.empty).map { sc =>
-          s"""{"scheduleId":${js(sc.scheduleId)},"name":${js(sc.name)},"scheduleType":${js(sc.scheduleType)},""" +
-            s""""runAtTime":${js(sc.runAtTime)},"enabled":${sc.enabled},""" +
-            s""""nextRunAt":${sc.nextRunAt.map(v => js(v.toString)).getOrElse("null")}}"""
+          s"""{"scheduleId":${Json.str(sc.scheduleId)},"name":${Json.str(sc.name)},"scheduleType":${Json.str(sc.scheduleType)},""" +
+            s""""runAtTime":${Json.str(sc.runAtTime)},"enabled":${sc.enabled},""" +
+            s""""nextRunAt":${sc.nextRunAt.map(v => Json.str(v.toString)).getOrElse("null")}}"""
         }
         respond(x, 200, rows.mkString("[", ",", "]"))
       case ("POST", List("schedules")) =>
@@ -201,15 +269,9 @@ class ApiServer(catalog: RunCatalog, runner: PipelineRunner,
         // the session, carrying the engine's own last progress (batch
         // id, rows/sec, event-time watermark) verbatim — the progress
         // and status objects serialize themselves to JSON
-        def js(v: String): String = "\"" + v.flatMap {
-          case '"' => "\\\""
-          case '\\' => "\\\\"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
         val items = streamSession.map(_.streams.active.toSeq).getOrElse(Seq.empty).map { sq =>
           s"""{"id":"${sq.id}","runId":"${sq.runId}",""" +
-            s""""name":${Option(sq.name).map(js).getOrElse("null")},""" +
+            s""""name":${Option(sq.name).map(Json.str).getOrElse("null")},""" +
             s""""isActive":${sq.isActive},"status":${sq.status.json},""" +
             s""""lastProgress":${Option(sq.lastProgress).map(_.json).getOrElse("null")}}"""
         }
@@ -271,12 +333,18 @@ class ApiServer(catalog: RunCatalog, runner: PipelineRunner,
     try handle(x.getRequestURI.getPath, x.getRequestMethod, x)
     catch {
       case e: Throwable =>
-        try respond(x, 500, s"""{"error":${"\"" + String.valueOf(e.getMessage).replace("\"", "'") + "\""}}""")
+        try respond(x, 500, s"""{"error":${Json.str(String.valueOf(e.getMessage))}}""")
         catch { case _: Throwable => () }
     })
 
   def start(): ApiServer = { server.start(); this }
-  def stop(): Unit = server.stop(0)
+  /** Stop serving and end the worker pool: its threads are not
+    * daemons, so a pool left running keeps the JVM alive. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(10, TimeUnit.SECONDS)) pool.shutdownNow()
+  }
 }
 
 object ApiServer {

@@ -1,6 +1,6 @@
 package graft.runner
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions.col
 
@@ -42,7 +42,7 @@ object StageJanitor {
             if (name.startsWith("run_id=")) {
               val runId = name.stripPrefix("run_id=")
               if (!keepIds.contains(runId)) {
-                deleteRecursively(dir)
+                graft.util.Fs.deleteRecursively(dir)
                 cleaned += runId
               }
             }
@@ -52,8 +52,4 @@ object StageJanitor {
     }
     cleaned.toSeq
   }
-
-  private def deleteRecursively(root: Path): Unit =
-    Files.walk(root).sorted(java.util.Comparator.reverseOrder[Path]())
-      .iterator().forEachRemaining(p => Files.deleteIfExists(p))
 }

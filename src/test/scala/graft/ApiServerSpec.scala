@@ -337,4 +337,90 @@ class ApiServerSpec extends SparkSpec {
       assert(list.contains(idA) && list.contains(idB))
     } finally api.stop()
   }
+
+  test("catalog routes serve the golden bodies byte for byte, in the session time zone") {
+    val b = CatalogFixture.build(spark)
+    val runner = new PipelineRunner(spark, b.catalog, s"${b.work}/runner")
+    val api = new ApiServer(b.catalog, runner, s"${b.work}/uploads").start()
+    val base = s"http://127.0.0.1:${api.boundPort}"
+    try {
+      for (zone <- Seq("UTC", "Asia/Kolkata")) {
+        spark.conf.set("spark.sql.session.timeZone", zone)
+        val golden = scala.io.Source.fromResource(s"catalog_golden/${zone.replace('/', '_')}.tsv",
+          getClass.getClassLoader)(scala.io.Codec.UTF8)
+        val lines = try golden.getLines().toVector finally golden.close()
+        assert(lines.nonEmpty)
+        for (line <- lines) {
+          val Array(route, code, body) = line.split("\t", 3)
+          val res = get(base + b.unmask(route))
+          assert(res.statusCode() == code.toInt, s"$zone $route")
+          assert(res.body() == b.unmask(body), s"$zone $route")
+        }
+      }
+    } finally {
+      spark.conf.set("spark.sql.session.timeZone", "UTC")
+      api.stop()
+    }
+    // a run older than the newest 100 is listed by a filter and found
+    // by id, though the unfiltered list no longer holds it
+    val old = b.id(3)
+    assert(b.catalog.runRows().size == 100 && !b.catalog.runRows().exists(_.run_id == old))
+    assert(b.catalog.runRows(status = Some("Failed")).exists(_.run_id == old))
+    assert(b.catalog.run(old).map(_.status).contains("Failed"))
+  }
+
+  test("a steady-state monitoring refresh starts no Spark job") {
+    val work = Files.createTempDirectory("graft_api_jobs").toString
+    val catalog = new RunCatalog(spark, s"$work/catalog", compactThreshold = 10)
+    val runner = new PipelineRunner(spark, catalog, work)
+    val api = new ApiServer(catalog, runner, s"$work/uploads").start()
+    val base = s"http://127.0.0.1:${api.boundPort}"
+    val ids = (1 to 6).map { i =>
+      val id = catalog.startRun(s"p$i")
+      catalog.updateStep(id, 1, "Running"); catalog.log(id, "Info", 1, "Data Pull started")
+      id
+    }
+    def refresh(id: String): Unit =
+      Seq(s"/runs", s"/runs/$id", s"/runs/$id/progress", s"/logs?runId=$id")
+        .foreach(r => assert(get(base + r).statusCode() == 200, r))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "fence")) fenced.countDown()
+        else jobs.incrementAndGet()
+    }
+    try {
+      refresh(ids.last) // first read: loads the compacted segments once
+      // the watched run keeps writing between refreshes
+      catalog.updateStep(ids.last, 1, "Success", 42L)
+      catalog.log(ids.last, "Info", 1, "Data Pull finished", Some("rows=42"))
+      catalog.updateStep(ids.last, 2, "Running")
+      spark.sparkContext.addSparkListener(listener)
+      refresh(ids.last)
+      assert(get(s"$base/runs/${ids.last}/progress").body().contains("\"rowsTotal\":42"))
+      // every event before the fence job has reached the listener once
+      // the fence's own start arrives
+      spark.sparkContext.setJobDescription("fence")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get() == 0, s"${jobs.get()} Spark jobs during a steady-state refresh")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      api.stop()
+    }
+  }
+
+  test("stop() ends the server's worker threads") {
+    val work = Files.createTempDirectory("graft_api_stop").toString
+    val catalog = new RunCatalog(spark, s"$work/catalog")
+    val api = new ApiServer(catalog, new PipelineRunner(spark, catalog, work), s"$work/uploads").start()
+    val prefix = s"graft-api-${api.boundPort}-"
+    def workers = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName.startsWith(prefix) && t.isAlive)
+    (1 to 3).foreach(_ => assert(get(s"http://127.0.0.1:${api.boundPort}/runs").statusCode() == 200))
+    assert(workers.nonEmpty)
+    api.stop()
+    assert(workers.isEmpty, workers.map(_.getName).mkString(", "))
+  }
 }

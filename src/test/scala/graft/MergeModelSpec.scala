@@ -126,13 +126,13 @@ class MergeModelSpec extends SparkSpec {
     val df = (1L to 2000L).map(k => (k, s"v$k", k, k))
       .toDF("k", "v", "w", "ord").repartition(8)
     MergeWriter.mergeByKeys(spark, dir, df, Seq("k"), "ord", buckets = 4)
-    val bucketDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .iterator()
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    val bucketDirs = walk.iterator()
     var seen = 0
     val it = new Iterator[java.nio.file.Path] {
       def hasNext = bucketDirs.hasNext; def next() = bucketDirs.next()
     }
-    it.filter(p => p.getFileName.toString.startsWith("_bucket="))
+    try it.filter(p => p.getFileName.toString.startsWith("_bucket="))
       .foreach { b =>
         seen += 1
         val files = java.nio.file.Files.list(b).iterator()
@@ -142,6 +142,7 @@ class MergeModelSpec extends SparkSpec {
         }
         assert(n == 1, s"bucket dir $b holds $n parquet files, expected 1")
       }
+    finally walk.close()
     assert(seen == 4, s"expected 4 bucket dirs, saw $seen")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
   }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.catalog.RunCatalog
@@ -356,8 +358,24 @@ class PipelineSpec extends SparkSpec {
       cat.log(id, "Info", 1, s"msg $i")
       id
     }
+    // route bodies before the explicit compactions (auto-compaction
+    // has already rolled segments and tombstoned appends by now)
+    val api = new graft.http.ApiServer(cat, new PipelineRunner(spark, cat, work), s"$work/uploads").start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def body(route: String): String = client.send(java.net.http.HttpRequest.newBuilder(
+      java.net.URI.create(s"http://127.0.0.1:${api.boundPort}$route")).GET.build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString()).body()
+    val routes = Seq("/runs", "/runs?status=Failed", s"/runs/${runIds.head}", s"/runs/${runIds.last}",
+      s"/runs/${runIds.head}/progress", s"/runs/${runIds.last}/logs", "/logs?limit=2000")
+    val before = routes.map(body)
     cat.compact() // roll the sub-threshold remainder too
     cat.compact() // deletion is deferred one generation — reap it
+    try {
+      assert(routes.map(body) == before)
+      val messages = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
+        .readTree(body("/logs?limit=2000")).elements().asScala.map(_.get("message").asText()).toSeq
+      assert(messages.size == 200 && messages.distinct.size == 200) // no duplicated log line
+    } finally api.stop()
     def fileCount(sub: String): Int =
       Option(new java.io.File(s"$work/catalog/$sub").listFiles()).map(_.length).getOrElse(0)
     for (store <- Seq("pipeline_runs", "step_runs", "pipeline_logs"))
@@ -373,6 +391,25 @@ class PipelineSpec extends SparkSpec {
     val late = cat.startRun("late")
     assert(cat.runs().count() == 201)
     assert(cat.steps(late).count() == 4)
+  }
+
+  test("a second catalog on the same directory sees the other's appends on its next read") {
+    val work = Files.createTempDirectory("graft_two_cats").toString
+    val first = new RunCatalog(spark, s"$work/catalog", compactThreshold = 5)
+    val a = first.startRun("first")
+    assert(first.runs().count() == 1 && first.listLogs().count() == 0) // index warmed
+    val second = new RunCatalog(spark, s"$work/catalog", compactThreshold = 5)
+    val b = second.startRun("second")
+    second.updateStep(b, 1, "Running")
+    second.log(b, "Info", 1, "from the second catalog")
+    assert(first.runRows().map(_.run_id).toSet == Set(a, b))
+    assert(first.stepRows(b).head.status == "Running")
+    assert(first.logRows(runId = Some(b)).map(_.message) == Seq("from the second catalog"))
+    // the second one's compaction (a segment plus a tombstone) leaves
+    // the first one's answers unchanged, without duplicates
+    second.finishRun(b, "Success"); second.compact(); second.compact()
+    assert(first.runRows().map(r => r.run_id -> r.status).toSet == Set(a -> "Running", b -> "Success"))
+    assert(first.logRows().size == 1 && first.stepRows(a).size == 4)
   }
 
   test("extract accepts the configured date-format list") {
